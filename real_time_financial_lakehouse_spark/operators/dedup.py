@@ -153,6 +153,23 @@ def lsh_candidate_pairs(
     signature computation runs once, not twice; buckets larger than
     ``max_bucket`` are dropped before expansion (see MAX_BUCKET) so a
     degenerate bucket can never O(n^2) a single task."""
+    return _lsh_pairs(documents, k, bands, shingle_n, max_bucket).distinct().orderBy(
+        "doc_a", "doc_b"
+    )
+
+
+def _lsh_pairs(
+    documents: DataFrame,
+    k: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+    max_bucket: int = MAX_BUCKET,
+) -> DataFrame:
+    """The banded (doc_a < doc_b) pairs of ``lsh_candidate_pairs`` before
+    its ``distinct().orderBy(...)`` tail: a pair sharing several bands
+    appears once per shared band.  Callers that only need connectivity
+    (``dedup_clusters``) skip the tail's two shuffles -- neither
+    duplicates nor order change which nodes an edge list connects."""
     rows = k // bands
     sigs = minhash_signatures(documents, k=k, shingle_n=shingle_n)
     band_cols = []
@@ -170,7 +187,7 @@ def lsh_candidate_pairs(
     buckets = banded.groupBy("band_id", "band_hash").agg(
         F.sort_array(F.collect_set("doc_id")).alias("ids")
     ).filter(F.size("ids") <= max_bucket)
-    return _pairs_within_bucket(buckets).distinct().orderBy("doc_a", "doc_b")
+    return _pairs_within_bucket(buckets)
 
 def ngram_jaccard_pairs(
     documents: DataFrame,
@@ -337,38 +354,30 @@ def dedup_clusters(
     edges -- the cluster table a dedup pipeline keeps one representative
     per row of.
 
-    Iterative min-label propagation (driver-controlled loop, each
-    iteration one distributed join + aggregate): labels start as each
-    node's own id; every pass each node takes the min of its own label
-    and its neighbors' labels; stop when a pass changes nothing.
-    Convergence needs at most ``diameter`` passes -- near-dup clusters
-    are shallow (duplicates of a common source), so a handful.  This is
-    the simple-iteration form of the large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce"); swap in
-    star-contraction if a corpus ever produces deep chain topologies.
+    Iterative min-label propagation (``min_label_components``): every
+    pass each node takes the min of its own label and its neighbors'
+    labels; stop when a pass changes nothing.  Convergence needs at most
+    ``diameter`` passes -- near-dup clusters are shallow (duplicates of a
+    common source), so a handful.  This is the simple-iteration form of
+    the large-star/small-star algorithm (Kiveris et al., "Connected
+    Components in MapReduce"); swap in star-contraction if a corpus ever
+    produces deep chain topologies.
 
     Scale: the loop iterates ONLY over edge-touched nodes -- an isolated
     document (the overwhelming majority of a real corpus) can never
-    change label, so it joins the result once at the end with its own id
-    and never enters an iteration.  Per-pass cost is therefore
-    proportional to the DUPLICATE SUBGRAPH, not the corpus: at 100 TB
-    the corpus-sized frame is touched exactly once (the final union),
-    and each pass is one shuffle over the near-dup nodes (groupBy doc on
-    the edge list).  Each pass's labels are cut from lineage with an
-    eager ``localCheckpoint`` -- an iterative loop that only persist()s
-    still re-embeds the whole history in every logical plan, and
-    driver-side plan analysis ends up dominating (measured: pass times
-    creep 0.6 s -> 3.3 s without the cut, stay flat with it).  The
-    loop's only driver-side data is the changed-row count.  The
-    iterating frames are tiny -- AQE's partition coalescer shrinks each
-    pass's shuffles at runtime, so no session conf is mutated
-    (concurrency-safe: other queries on the same session keep their own
-    partitioning).  No cache handles survive the return (checkpoint
-    blocks are freed by GC); on a multi-executor cluster prefer a
-    reliable ``checkpoint()`` dir so the labels survive executor loss.
-    """
+    change label, so it meets the labels once, in the lazy final join,
+    and never enters a pass.  Per-pass cost is therefore proportional to
+    the DUPLICATE SUBGRAPH, not the corpus.  On a small corpus the cost
+    is not that bound but the Spark jobs each pass starts (tens of ms
+    each), so each pass starts exactly one eager action (see
+    ``min_label_components``).  When it builds its own edges, the LSH
+    pairs are taken before ``lsh_candidate_pairs``' ``distinct()`` and
+    ``orderBy`` tail: duplicate edges and their order do not change
+    connectivity, so those two shuffles would buy nothing.  ``pairs``
+    lets a caller that already holds the candidate pairs
+    (``dedup_funnel``) share them instead of re-running the ladder."""
     if pairs is None:
-        pairs = lsh_candidate_pairs(documents, k=k, bands=bands)
+        pairs = _lsh_pairs(documents, k=k, bands=bands)
     edges = pairs.select("doc_a", "doc_b")
     return min_label_components(edges, documents.select("doc_id"), max_iter=max_iter)
 
@@ -380,21 +389,40 @@ def min_label_components(
     edge list; ``universe`` supplies every node id (column ``doc_id``) so
     isolated nodes come back as their own single-member cluster.  Shared
     by the LSH ladder (``dedup_clusters``) and the embedding-space
-    semantic dedup (similarity.semantic_dedup_keep) -- the loop's scale
-    properties (edge-subgraph iteration, lineage cuts) are documented on
-    ``dedup_clusters`` and apply to any caller."""
+    semantic dedup (similarity.semantic_dedup_keep).  Returns a lazy
+    (doc_id, cluster_id) frame ordered by doc_id: ``universe``
+    left-joined to the labels, so isolated nodes never enter a pass.
+
+    A pass joins the labels to the mirrored edges and takes, per node,
+    the min of its own label and the labels its neighbors offer -- one
+    join and one aggregate.  Jobs: one eager action for the mirrored
+    edges, then exactly ONE per pass:
+
+    - Pass 1 reads the mirrored edges alone: every label is still its
+      node's own id, so no initial label frame is built.
+    - The changed count rides on the pass's own checkpoint:
+      ``DataFrame.observe`` counts changed labels while the eager
+      ``localCheckpoint`` runs and ``Observation.get`` reads the count
+      back -- no separate count job, and it works under Spark Connect.
+    - The edge and per-pass ``localCheckpoint`` cuts stay: every pass
+      references both frames, and without the cuts each pass's logical
+      plan re-embeds the whole history, so driver-side plan analysis
+      grows per pass and ends up dominating (measured: passes creep
+      0.6 s -> 3.3 s without them, flat ~0.3 s with them).  Both frames
+      are edge-subgraph sized (two longs a row).  localCheckpoint blocks
+      are executor-local: on a multi-executor cluster prefer a reliable
+      ``checkpoint()`` dir so the labels survive executor loss.
+
+    Not converging within ``max_iter`` passes warns and returns the last
+    labels, an upper bound on each node's component minimum."""
     import warnings
 
+    from pyspark.sql import Observation
+
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Mirror the DIRECTED edges in ONE pass -- explode(array(fwd, rev))
-    # emits both directions from a single scan of the upstream pair
-    # index (the former union-of-two-branches needed a persist + count
-    # job just to stop the LSH plan executing twice) -- then CUT the
-    # mirrored edge list's lineage with an eager localCheckpoint: every
-    # loop iteration references sym, and without the cut each pass's
-    # logical plan re-embeds the whole upstream lineage -- plan analysis
-    # on the driver grows per pass and ends up dominating the loop
-    # (measured: iterations creep 0.6 s -> 3.3 s without the cut, flat
-    # ~0.3 s with it).
+    # emits both directions from a single scan of the upstream pairs.
     sym = (
         edges.select(
             F.explode(
@@ -410,40 +438,42 @@ def min_label_components(
         .select("e.doc_a", "e.doc_b")
         .localCheckpoint(eager=True)
     )
-    # sym carries both directions, so doc_a alone enumerates every
-    # edge-touched node
-    labels = (
-        sym.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    changed = 0
+    # sym carries both directions, so grouping on doc_b reaches every
+    # edge-touched node: each pass labels exactly that node set
+    labels = None
     for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["doc_a"] == labels["doc_id"])
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("neighbor_label"))
-        )
-        # The changed flag is computed inline so convergence detection is
-        # a filter-count over the already-materialized frame, not a
-        # second join against the previous labels.  localCheckpoint (not
-        # persist) so the NEXT pass's plan starts from this pass's RDD
-        # blocks -- constant-size plans, no lineage growth.
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("neighbor_label"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-                (F.col("neighbor_label") < F.col("cluster_id")).alias("changed"),
+        if labels is None:
+            # pass 1: every label is still its node's own id
+            step = (
+                sym.groupBy(F.col("doc_b").alias("doc_id"))
+                .agg(F.min("doc_a").alias("offer"))
+                .withColumn("own", F.col("doc_id"))
             )
+        else:
+            # a node's own row carries its current label as "own" (the
+            # neighbor rows leave it null), so one aggregate yields both
+            # the new label and the one it replaces
+            step = (
+                sym.join(labels, sym["doc_a"] == labels["doc_id"])
+                .select(sym["doc_b"].alias("doc_id"), F.col("cluster_id").alias("offer"))
+                .unionByName(
+                    labels.select(
+                        "doc_id",
+                        F.col("cluster_id").alias("offer"),
+                        F.col("cluster_id").alias("own"),
+                    ),
+                    allowMissingColumns=True,
+                )
+                .groupBy("doc_id")
+                .agg(F.min("offer").alias("offer"), F.max("own").alias("own"))
+            )
+        obs = Observation()
+        labels = (
+            step.observe(obs, F.count_if(F.col("offer") < F.col("own")).alias("changed"))
+            .select("doc_id", F.least("offer", "own").alias("cluster_id"))
             .localCheckpoint(eager=True)
         )
-        changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.drop("changed")
+        changed = obs.get["changed"]
         if changed == 0:
             break
     if changed > 0:
@@ -454,13 +484,11 @@ def min_label_components(
             f"Raise max_iter or switch to star-contraction.",
             stacklevel=2,
         )
-    # isolated nodes (no candidate edge) are their own cluster; they join
-    # the loop's output exactly once, corpus-sized but single-pass
-    isolated = (
-        universe.join(labels.select("doc_id"), "doc_id", "left_anti")
-        .withColumn("cluster_id", F.col("doc_id"))
+    return (
+        universe.join(labels, "doc_id", "left")
+        .select("doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
+        .orderBy("doc_id")
     )
-    return labels.unionByName(isolated).orderBy("doc_id").localCheckpoint(eager=True)
 
 def fuzzy_dedup_keep(
     documents: DataFrame,
@@ -481,9 +509,9 @@ def fuzzy_dedup_keep(
     representative filter (doc_id == cluster_id) is exact because labels
     converge to min(reachable id).
 
-    ``clusters`` lets a caller that already materialized the component
-    labels (``dedup_funnel``, which counts every ladder stage) share the
-    checkpointed frame instead of re-running the LSH ladder + loop."""
+    ``clusters`` lets a caller that already built the component labels
+    (``dedup_funnel``, which counts every ladder stage) share them
+    instead of re-running the LSH ladder + loop."""
     if clusters is None:
         clusters = dedup_clusters(documents, k=k, bands=bands)
     sizes = clusters.groupBy("cluster_id").agg(
@@ -704,10 +732,11 @@ def minhash_jaccard_estimate(
     per-row-expensive work -- so the shingling + signature projection
     runs only over candidate docs, in ONE shared pass (the shingle array
     feeds both the k-min signature and the distinct-shingle set), not
-    the five full-corpus passes a naive four-way join costs.  The two
-    feature joins key on that filtered frame; the corpus itself never
-    shuffles, and the exact Jaccard runs ONLY on banding survivors,
-    never all-pairs.  |A∪B| is computed as
+    the five full-corpus passes a naive four-way join costs.  The pairs
+    are exploded to one row per (pair, side doc), joined to those
+    features once, and pivoted back to (a, b) with max_by/min_by on the
+    side flag; the corpus itself never shuffles, and the exact Jaccard
+    runs ONLY on banding survivors, never all-pairs.  |A∪B| is computed as
     |A|+|B|-|A∩B| so only the intersection's array pass runs per pair.
     Two empty shingle sets are byte-identical content: Jaccard 1.0 by
     definition, never a zero division."""

@@ -9,7 +9,10 @@ instead of re-running the whole inventory.
 Honors $SPARK_GRAFT_CPUS exactly like bench.py (local[N] master +
 shuffle partitions), so 8-core vs 32-core scaling checks are one env
 var away.  Prints one JSON line per query with every rep, the median,
-and the min; optionally writes the formatted plan next to --plan-dir.
+the median job counts of the construct phase (the registry function,
+including any eager action it starts) and of the execute phase (the
+noop write) -- one job group per phase on ``statusTracker()`` -- and the
+min; optionally writes the formatted plan next to --plan-dir.
 """
 
 from __future__ import annotations
@@ -51,17 +54,36 @@ def main() -> int:
     small = spark.range(100).withColumnRenamed("id", "k")
     spark.range(10_000).join(F.broadcast(small), F.col("id") == F.col("k")).count()
 
+    sc = spark.sparkContext
+
+    def phase_jobs(group: str, work):
+        """Run ``work`` in its own job group; return (result, job count)."""
+        sc.setJobGroup(group, group)
+        try:
+            result = work()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
     out = {}
     for name in args.names:
         fn = registry.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"micro-bench: {name}")
-        runs = []
-        for _ in range(args.reps):
+        runs, construct_jobs, execute_jobs = [], [], []
+        for rep in range(args.reps):
             t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+            df, cj = phase_jobs(f"{name}:construct:{rep}", lambda: fn(spark, args.sf))
+            _, ej = phase_jobs(
+                f"{name}:execute:{rep}",
+                lambda: df.write.format("noop").mode("overwrite").save(),
+            )
             runs.append(round(time.perf_counter() - t0, 3))
+            construct_jobs.append(cj)
+            execute_jobs.append(ej)
         out[name] = {
             "median": round(statistics.median(runs), 3),
+            "construct_jobs": statistics.median(construct_jobs),
+            "execute_jobs": statistics.median(execute_jobs),
             "min": min(runs),
             "reps": runs,
         }

@@ -95,6 +95,90 @@ def test_ngram_pack_guard_raises_on_out_of_range_doc_id(spark):
     with pytest.raises(Exception, match="ngram pack overflow"):
         dedup.ngram_jaccard_pairs(big_id).collect()
 
+def _components(spark, edges, universe, **kwargs):
+    """(doc_id, cluster_id) rows of min_label_components, collected on a
+    worker thread so a blocked Observation.get fails the test instead of
+    hanging the suite."""
+    import threading
+
+    e = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    out = {}
+
+    def run():
+        try:
+            df = dedup.min_label_components(e, universe, **kwargs)
+            out["rows"] = [(r["doc_id"], r["cluster_id"]) for r in df.collect()]
+        except Exception as exc:  # re-raised on the test thread
+            out["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "min_label_components did not return within 120 s"
+    if "error" in out:
+        raise out["error"]
+    return out["rows"]
+
+def test_min_label_components_empty_edges_are_singletons(spark):
+    import warnings
+
+    universe = spark.range(5).withColumnRenamed("id", "doc_id")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        rows = _components(spark, [], universe)
+    assert rows == [(i, i) for i in range(5)]
+
+def test_min_label_components_max_iter_cut_warns_upper_bound(spark):
+    universe = spark.range(4).withColumnRenamed("id", "doc_id")
+    chain = [(0, 1), (1, 2), (2, 3)]
+    with pytest.warns(UserWarning, match="not converged after 1 passes"):
+        rows = _components(spark, chain, universe, max_iter=1)
+    # one pass moves each label one hop toward 0: never below the true
+    # component minimum, so an upper bound on every node's final label
+    assert rows == [(0, 0), (1, 0), (2, 1), (3, 2)]
+    edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    with pytest.raises(ValueError, match="max_iter"):
+        dedup.min_label_components(edges, universe, max_iter=0)
+
+def test_min_label_components_output_ordered_by_doc_id(spark):
+    universe = spark.range(60).withColumnRenamed("id", "doc_id").repartition(4)
+    edges = [(i, i + 30) for i in range(0, 30, 3)] + [(59, 7), (12, 44)]
+    rows = _components(spark, edges, universe)
+    assert [d for d, _ in rows] == list(range(60))
+    assert dict(rows)[59] == 7 and dict(rows)[44] == 12 and dict(rows)[42] == 12
+
+def test_dedup_clusters_job_count_pin(spark):
+    """Jobs started by dedup_clusters at sf0.001, per phase (one job group
+    each on statusTracker).  Before the loop started one eager action per
+    pass, construction started 28 jobs and construction plus the noop
+    execution 29; now 8 and 14.  The pin leaves headroom for AQE
+    stage-splitting differences, not for another per-pass job."""
+    from conftest import SF_SMOKE
+
+    from real_time_financial_lakehouse_spark import registry
+
+    sc = spark.sparkContext
+
+    def jobs_in(group, work):
+        sc.setJobGroup(group, group)
+        try:
+            result = work()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, construct = jobs_in(
+        "pin-dedup-clusters-construct",
+        lambda: registry.QUERIES["dedup_clusters"](spark, SF_SMOKE),
+    )
+    _, execute = jobs_in(
+        "pin-dedup-clusters-execute",
+        lambda: df.write.format("noop").mode("overwrite").save(),
+    )
+    assert construct <= 14, (construct, execute)
+    assert construct + execute <= 20, (construct, execute)
+
 def test_simhash_hamming_reflects_similarity(docs):
     fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash_fingerprints(docs).collect()}
     ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
